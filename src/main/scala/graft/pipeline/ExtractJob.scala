@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.functions.{ExtractKernel, GraftFunctions}
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import java.nio.file.{Files, Paths}
@@ -14,14 +14,17 @@ import java.nio.file.{Files, Paths}
   *       input-split-addressed]
   *     → resume filter (anti-filter on committed pids)
   *     → extract_content native expression                [narrow, fused]
-  *     → repartition(N, pid)   [the ONLY shuffle; carries extracted text,
-  *       not raw html — extraction runs map-side, upstream of the
-  *       exchange, so shuffle bytes ≈ output size, not input size]
+  *     → rebalance(pid)   [the ONLY shuffle; AQE sizes the write tasks;
+  *       carries extracted text, not raw html — extraction runs map-side,
+  *       upstream of the exchange, so shuffle bytes ≈ output size]
+  *     → observe(PidStats)   [per-pid rows, bytes, md5-60bit digest and
+  *       error counts, aggregated in the write's result stage by the same
+  *       pass that writes the rows]
   *     → single write partitionBy(pid), dynamic partition overwrite
   *       [idempotent per pid → per-key exactly-once, strictly stronger
   *       than the reference's at-most-once delivery
   *       (/root/reference/src/kafka_consumer.py:111-121,70)]
-  *     → lineage agg over the written output + atomic manifest commit.
+  *     → lineage rows from the observed stats + atomic manifest commit.
   *
   * Error rows (validation/payload/unexpected) are DATA, not exceptions:
   * they live in the same table with a `reason` in the `error` column, so
@@ -93,23 +96,43 @@ object ExtractJob {
         col("r.error").as("error"),
         col("pid"))
 
-  /** Per-pid lineage aggregate over WRITTEN docs rows. The digest is
-    * md5-60bit (not xxhash64): any external system — DuckDB, Trino, a
-    * Python auditor — can recompute the per-partition digest from the
-    * written parquet alone and verify lineage integrity without running
-    * this engine (same construction as x_lineage / DigestAggregator).
+  /** One row's lineage digest term: md5-60bit of its [[digestRecord]],
+    * mod 1e9+7; a pid's digest is the sum of its rows' terms. md5, not
+    * xxhash64: any external system — DuckDB, Trino, a Python auditor —
+    * can recompute the per-partition digest from the written parquet
+    * alone and verify lineage integrity without running this engine
+    * (same construction as x_lineage / DigestAggregator).
     */
-  private[pipeline] def lineageAgg(written: DataFrame): Array[org.apache.spark.sql.Row] = {
-    val rec = digestRecord(col("url"), col("extracted_text"), col("error"))
-    written.groupBy(col("pid")).agg(
-      count(lit(1)).as("rows"),
-      sum("in_bytes").as("bytes"),
-      sum(pmod(conv(substring(md5(rec), 1, 15), 16, 10).cast("long"), lit(1000000007L))).as("dig"),
-      sum(when(col("error").isNull, 1L).otherwise(0L)).as("ok"),
-      sum(when(col("error") === "validation", 1L).otherwise(0L)).as("f_val"),
-      sum(when(col("error") === "payload", 1L).otherwise(0L)).as("f_pay"),
-      sum(when(col("error") === "unexpected", 1L).otherwise(0L)).as("f_unx"))
-      .collect()
+  def digestTerm(url: Column, text: Column, error: Column): Column =
+    pmod(conv(substring(md5(digestRecord(url, text, error)), 1, 15), 16, 10).cast("long"),
+      lit(1000000007L))
+
+  /** Write an extracted frame (with `pid` in `[0, numPids)`) to `path`,
+    * `partitionBy(partitionCols)` with write-scoped dynamic overwrite,
+    * and return the per-pid [[PidStats]] of exactly the written rows.
+    *
+    * `rebalance(pid)` is the one shuffle; AQE sizes its partitions (a
+    * fixed `repartition(numPids, pid)` re-hashes the already-reduced pid
+    * and leaves some write tasks empty). The observation sits ABOVE the
+    * exchange, in the result stage: Spark applies a result task's
+    * accumulator updates once per partition, so a retried task cannot
+    * double-count.
+    */
+  private[pipeline] def writeObserved(extracted: DataFrame, numPids: Int, path: String,
+                                      partitionCols: String*): IndexedSeq[PidStats.Counts] = {
+    val obs = Observation()
+    val stats = udaf(PidStats(numPids)).apply(col("pid"), col("in_bytes"),
+      digestTerm(col("url"), col("extracted_text"), col("error")), col("error"))
+    extracted.hint("rebalance", col("pid"))
+      .observe(obs, stats.as("pid_stats"))
+      .write.mode(SaveMode.Overwrite).partitionBy(partitionCols: _*)
+      // scoped to THIS write (not session config): only the pids present
+      // in the batch are overwritten — per-pid idempotent rerun — without
+      // silently changing Overwrite semantics for other writes on the
+      // caller's shared session
+      .option("partitionOverwriteMode", "dynamic")
+      .parquet(path)
+    PidStats.counts(obs.get("pid_stats").asInstanceOf[collection.Seq[Long]])
   }
 
   /** Run (or resume) the extraction over a page table. Returns the run
@@ -142,47 +165,29 @@ object ExtractJob {
       .withColumn("pid", pidCol(cfg.numPids))
       .where(col("pid").isin(runPids: _*))
 
-    val extracted = extractColumns(withPid)
-      .repartition(cfg.numPids, col("pid"))
-
-    extracted.write.mode(SaveMode.Overwrite).partitionBy("pid")
-      // scoped to THIS write (not session config): only the pids present
-      // in the batch are overwritten — per-pid idempotent rerun — without
-      // silently changing Overwrite semantics for other writes on the
-      // caller's shared session
-      .option("partitionOverwriteMode", "dynamic")
-      .parquet(s"${cfg.outputDir}/docs")
-
-    // lineage + metrics from the WRITTEN output (column-pruned read of the
-    // small result table — never a second pass over the raw html)
-    val written = docs(spark, cfg.outputDir).where(col("pid").isin(runPids: _*))
-    val agg = lineageAgg(written)
-
-    val byPid = agg.map(r => r.getInt(0) -> r).toMap
+    val stats = writeObserved(extractColumns(withPid), cfg.numPids, s"${cfg.outputDir}/docs", "pid")
     import spark.implicits._
     val lineageRows = runPids.map { p =>
-      byPid.get(p) match {
-        case Some(r) => (p, r.getLong(1), r.getLong(2), r.getLong(3).toString)
-        case None    => (p, 0L, 0L, "0")
-      }
+      val c = stats(p)
+      (p, c.rows, c.bytes, c.digest.toString)
     }.toDF("partition_id", "rows", "bytes", "digest")
-    Lineage.commit(spark, cfg.outputDir, lineageRows)
-    val snap = Lineage.readManifest(cfg.outputDir)._1
+    val snap = Lineage.commit(spark, cfg.outputDir, lineageRows)
 
     val report = RunReport(
       snapshot = snap,
       pidsProcessed = runPids.size,
-      docsOk = agg.map(_.getLong(4)).sum,
-      failedValidation = agg.map(_.getLong(5)).sum,
-      failedPayload = agg.map(_.getLong(6)).sum,
-      failedUnexpected = agg.map(_.getLong(7)).sum,
-      bytesIn = agg.map(_.getLong(2)).sum,
-      wallSec = (System.nanoTime() - t0) / 1e9)
+      docsOk = stats.map(_.ok).sum,
+      failedValidation = stats.map(_.validation).sum,
+      failedPayload = stats.map(_.payload).sum,
+      failedUnexpected = stats.map(_.unexpected).sum,
+      bytesIn = stats.map(_.bytes).sum,
+      wallSec = (System.nanoTime() - t0) / 1e9,
+      stages = listener.snapshot)
 
     val mdir = Paths.get(cfg.outputDir, "_metrics")
     Files.createDirectories(mdir)
     Files.write(mdir.resolve(s"run-$snap.json"),
-      report.toJson(listener.snapshot).getBytes("UTF-8"))
+      report.toJson.getBytes("UTF-8"))
     spark.sparkContext.removeSparkListener(listener)
     report
   }

@@ -13,11 +13,13 @@ import scala.jdk.CollectionConverters._
   *   1. results are written `partitionBy("pid")` with dynamic partition
   *      overwrite (idempotent per pid — rerunning an uncommitted pid
   *      replaces, never duplicates);
-  *   2. lineage rows (pid, offset=snapshot, rows, bytes, digest) are
-  *      appended under `_lineage/data`;
-  *   3. the manifest (committed pid set + snapshot counter) is rewritten
-  *      via temp file + atomic rename — a crash anywhere before (3) leaves
-  *      the previous manifest intact and the interrupted pids uncommitted.
+  *   2. the caller's lineage rows (pid, rows, bytes, digest, computed by
+  *      the write itself) are collected once and written as ONE file under
+  *      `_lineage/data/offset=<snapshot>`;
+  *   3. the manifest (committed pid set, taken from those same rows, +
+  *      snapshot counter) is rewritten via temp file + atomic rename — a
+  *      crash anywhere before (3) leaves the previous manifest intact and
+  *      the interrupted pids uncommitted.
   *
   * Resume = anti-filter on the committed pid set: any rerun processes
   * exactly the complement, at partition granularity (north_star). This is
@@ -161,12 +163,10 @@ object Lineage {
     * (the Iceberg writer-schema analog). Readers union snapshots by
     * name — a column added in snapshot K reads as null for rows of
     * snapshots < K — so a 100-TB table never rewrites history to add a
-    * field.
+    * field. Returns the new snapshot.
     */
-  def commit(spark: SparkSession, outputDir: String, lineage: DataFrame): Unit = {
+  def commit(spark: SparkSession, outputDir: String, lineage: DataFrame): Long =
     commitInternal(spark, outputDir, lineage, epoch = None)
-    ()
-  }
 
   /** Streaming micro-batch commit: same snapshot protocol, plus the
     * epoch id is recorded so a foreachBatch REPLAY of an already-
@@ -185,7 +185,7 @@ object Lineage {
   private val BaseCols = Seq("partition_id", "rows", "bytes", "digest")
 
   private def commitInternal(spark: SparkSession, outputDir: String,
-                             lineage: DataFrame, epoch: Option[Long]): Unit = {
+                             lineage: DataFrame, epoch: Option[Long]): Long = {
     // guard against the pre-snapshot layout (flat parquet with an offset
     // COLUMN directly under data/): mixing it with offset=N partition
     // dirs breaks Spark's partition discovery at read time — fail the
@@ -209,19 +209,21 @@ object Lineage {
     val extras = lineage.columns.filterNot(BaseCols.contains).toSeq
     val cols = BaseCols ++ extras
     val stamped = lineage.select(cols.head, cols.tail: _*)
-    stamped.write.mode(SaveMode.Overwrite)
+    // run the caller's plan exactly once: the collected rows are both the
+    // written snapshot and the manifest's pid set, so the manifest can
+    // never name a pid whose row was not written (a non-deterministic
+    // input plan re-run could)
+    val rows = stamped.collect()
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), stamped.schema).coalesce(1)
+      .write.mode(SaveMode.Overwrite)
       .parquet(s"$outputDir/_lineage/data/offset=$newSnap")
-    // collect the committed pids from the WRITTEN snapshot, not by
-    // re-executing the caller's plan: one execution, and the manifest can
-    // never diverge from the rows actually on disk (a non-deterministic
-    // input plan re-run could commit pids that were never written)
-    val pids = spark.read.parquet(s"$outputDir/_lineage/data/offset=$newSnap")
-      .select("partition_id").collect().map(_.getInt(0)).toSet
+    val pids = rows.map(_.getInt(0)).toSet
     writeManifest(outputDir, Manifest(
       snapshot = newSnap,
       pids = m.pids ++ pids,
       epochs = m.epochs ++ epoch,
       schemas = m.schemas + (newSnap -> cols)))
+    newSnap
   }
 
   /** The lineage table as a DataFrame (latest snapshot per pid). */

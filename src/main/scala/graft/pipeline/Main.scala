@@ -57,8 +57,9 @@ object Main {
       val takeover = opts.get("--takeover").exists(_.toBoolean)
       val report = ExtractJob.run(spark, pages,
         ExtractJob.JobConfig(output, numPids, takeover = takeover))
-      // single JSON line, the service's structured-log analog
-      println(report.toJson(Nil))
+      // single JSON line, the service's structured-log analog — the same
+      // text as _metrics/run-<snapshot>.json, stages included
+      println(report.toJson)
     } finally spark.stop()
   }
 }

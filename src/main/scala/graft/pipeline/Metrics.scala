@@ -11,11 +11,11 @@ import scala.jdk.CollectionConverters._
   * to Spark: a SparkListener captures per-stage task metrics, and the job
   * publishes docs/s, MB/s and the extraction-failure rate (north_star).
   */
-final class GraftMetricsListener extends SparkListener {
-  final case class StageRec(stageId: Int, name: String, tasks: Int,
-      executorRunTimeMs: Long, inputBytes: Long, inputRecords: Long,
-      outputBytes: Long, shuffleWriteBytes: Long)
+final case class StageRec(stageId: Int, name: String, tasks: Int,
+    executorRunTimeMs: Long, inputBytes: Long, inputRecords: Long,
+    outputBytes: Long, shuffleWriteBytes: Long)
 
+final class GraftMetricsListener extends SparkListener {
   private val stages = new ConcurrentLinkedQueue[StageRec]()
 
   override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
@@ -39,7 +39,8 @@ final case class RunReport(
     failedPayload: Long,
     failedUnexpected: Long,
     bytesIn: Long,
-    wallSec: Double) {
+    wallSec: Double,
+    stages: Seq[StageRec] = Nil) {
   def docsTotal: Long = docsOk + failedValidation + failedPayload + failedUnexpected
   def docsPerSec: Double = if (wallSec > 0) docsTotal / wallSec else 0.0
   def mbPerSec: Double = if (wallSec > 0) bytesIn / 1e6 / wallSec else 0.0
@@ -60,7 +61,10 @@ final case class RunReport(
     case c            => c.toString
   }
 
-  def toJson(stages: Seq[GraftMetricsListener#StageRec]): String = {
+  /** The run report as one JSON line: the same text goes to stdout
+    * (`Main`) and to `_metrics/run-<snapshot>.json`.
+    */
+  def toJson: String = {
     val stageJson = stages.map { s =>
       s"""{"stage":${s.stageId},"name":"${jstr(s.name)}","tasks":${s.tasks},""" +
         s""""executor_run_ms":${s.executorRunTimeMs},"input_bytes":${s.inputBytes},""" +

@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.functions.GraftFunctions
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
@@ -17,10 +17,14 @@ import org.apache.spark.sql.types._
   *   2. write `partitionBy(epoch, pid)` with WRITE-SCOPED dynamic
   *      overwrite — a replayed batch rewrites exactly its own
   *      `epoch=B/pid=*` partitions, so retries are idempotent and other
-  *      epochs are never touched;
-  *   3. per-pid lineage rows (rows, bytes, md5-60bit digest, epoch)
-  *      committed via [[Lineage.commitEpoch]] — snapshot-keyed data +
-  *      atomic manifest rename, with the EPOCH recorded in the manifest.
+  *      epochs are never touched ([[ExtractJob.writeObserved]], the same
+  *      rebalanced, observed write as the batch job);
+  *   3. per-pid lineage rows (rows, bytes, md5-60bit digest, epoch) for
+  *      every pid the batch wrote, taken from the stats the write itself
+  *      observed (no re-read of the written epoch), committed via
+  *      [[Lineage.commitEpoch]] — snapshot-keyed data + atomic manifest
+  *      rename, with the EPOCH recorded in the manifest. An empty batch
+  *      commits its epoch with no lineage rows.
   *
   * Exactly-once across crashes: Spark's checkpoint replays the last
   * un-acknowledged batch after a restart; step 2 is an overwrite (no doc
@@ -81,22 +85,16 @@ object StreamingLineage {
                           outputDir: String, numPids: Int,
                           epochId: Long): Boolean = {
     if (Lineage.epochCommitted(outputDir, epochId)) return false
-    val extracted = ExtractJob.extractColumns(
-        batch.withColumn("pid", ExtractJob.pidCol(numPids)))
-      .withColumn("epoch", lit(epochId))
-      .repartition(numPids, col("pid"))
-    extracted.write.mode(SaveMode.Overwrite).partitionBy("epoch", "pid")
-      .option("partitionOverwriteMode", "dynamic")
-      .parquet(s"$outputDir/docs")
-    // lineage from the WRITTEN epoch (column-pruned result read, never a
-    // second pass over html); rows carry the epoch as an extra column —
-    // the manifest records the widened writer schema per snapshot
-    val written = docs(spark, outputDir).where(col("epoch") === epochId)
-    val agg = ExtractJob.lineageAgg(written)
+    val stats = ExtractJob.writeObserved(
+      ExtractJob.extractColumns(batch.withColumn("pid", ExtractJob.pidCol(numPids)))
+        .withColumn("epoch", lit(epochId)),
+      numPids, s"$outputDir/docs", "epoch", "pid")
+    // rows carry the epoch as an extra column — the manifest records the
+    // widened writer schema per snapshot
     import spark.implicits._
-    val lineageRows = agg.map(r =>
-        (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3).toString, epochId))
-      .toSeq.toDF("partition_id", "rows", "bytes", "digest", "epoch")
+    val lineageRows = stats.zipWithIndex.collect { case (c, p) if c.rows > 0 =>
+        (p, c.rows, c.bytes, c.digest.toString, epochId)
+      }.toDF("partition_id", "rows", "bytes", "digest", "epoch")
     Lineage.commitEpoch(spark, outputDir, lineageRows, epochId)
   }
 }

@@ -140,11 +140,12 @@ object Warc {
   /** Write `pages` (url, warc_ts, html, lang) as `numFiles` WARC chunk
     * files under `dir` (plus `_SUCCESS`). Null-html rows are dropped — a
     * fetch that returned nothing produces no response record, exactly as
-    * on the real crawl. Deterministic: hash partitioning on url + in-file
-    * url sort, a fixed gzip member header (MTIME=0), no randomness in
-    * the bytes. Task-retry-safe: each attempt writes `_tmp-…-<attempt>`
-    * and commits via rename; the first attempt to commit wins and later
-    * attempts discard their temp file.
+    * on the real crawl. Deterministic: file k holds the urls with
+    * `pmod(xxhash64(url), numFiles) = k`, url-sorted within the file, a
+    * fixed gzip member header (MTIME=0), no randomness in the bytes.
+    * Task-retry-safe: each attempt writes `_tmp-…-<attempt>` and commits
+    * via rename; the first attempt to commit wins and later attempts
+    * discard their temp file.
     */
   def write(spark: SparkSession, pages: DataFrame, dir: String,
             numFiles: Int = 8, gzip: Boolean = true): Unit = {
@@ -155,7 +156,10 @@ object Warc {
       .select(col("url"), col("warc_ts").cast("timestamp"), col("html"),
         coalesce(col("lang"), lit("")).as("lang"))
       .where(col("html").isNotNull)
-      .repartition(numFiles, pmod(xxhash64(col("url")), lit(numFiles.toLong)))
+      // file k holds exactly the urls whose hash is k mod numFiles
+      // (`repartition` would hash the already-reduced key again and
+      // leave some files empty)
+      .repartitionById(numFiles, pmod(xxhash64(col("url")), lit(numFiles.toLong)).cast("int"))
       .sortWithinPartitions(col("url"))
       .as[(String, java.sql.Timestamp, Array[Byte], String)]
       .foreachPartition { (it: Iterator[(String, java.sql.Timestamp, Array[Byte], String)]) =>

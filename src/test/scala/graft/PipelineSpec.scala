@@ -4,9 +4,16 @@ import graft.fixtures.Corpus
 import graft.pipeline.{ExtractJob, Lineage}
 import graft.sources.Warc
 import graft.pipeline.ExtractJob.JobConfig
+import org.apache.spark.sql.execution.{CollectMetricsExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.execution.exchange.{REBALANCE_PARTITIONS_BY_COL, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
+import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
 
 /** Operator tests on local Spark (SURVEY.md §5.2 item 2): lineage commit,
   * resume-after-kill at partition granularity, partition pruning on the
@@ -19,6 +26,33 @@ class PipelineSpec extends AnyFunSuite {
 
   private def freshDir(tag: String): String =
     Files.createTempDirectory(s"graft-$tag").toString
+
+  /** The executed docs write plan of one full job run (shared by the
+    * plan-shape tests). Query-execution events arrive asynchronously, so
+    * wait for it.
+    */
+  private lazy val jobWritePlan: SparkPlan = {
+    val out = freshDir("plan")
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = plans.add(qe.executedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    def isDocsWrite(p: SparkPlan): Boolean = LineageAudit.nodes(p).exists {
+      case w: DataWritingCommandExec => w.cmd match {
+        case i: InsertIntoHadoopFsRelationCommand => i.outputPath.toString.endsWith(s"$out/docs")
+        case _                                    => false
+      }
+      case _ => false
+    }
+    spark.listenerManager.register(listener)
+    try {
+      ExtractJob.run(spark, Corpus.pages(spark, sfDir), JobConfig(out, numPids = 16))
+      val deadline = System.nanoTime() + 60.seconds.toNanos
+      while (!plans.asScala.exists(isDocsWrite) && System.nanoTime() < deadline) Thread.sleep(20)
+      plans.asScala.find(isDocsWrite).getOrElse(fail(s"no docs write observed under $out"))
+    } finally spark.listenerManager.unregister(listener)
+  }
 
   test("full run: report counts match the frozen error-routing rule; lineage committed") {
     val out = freshDir("full")
@@ -50,6 +84,69 @@ class PipelineSpec extends AnyFunSuite {
     val mjson = new String(Files.readAllBytes(
       java.nio.file.Paths.get(out, "_metrics", "run-1.json")), "UTF-8")
     assert(mjson.contains("\"docs_per_sec\"") && mjson.contains("\"failure_rate\""))
+    // the JSON line Main prints is the metrics file, stage records included
+    assert(report.toJson == mjson)
+    assert(report.stages.nonEmpty && mjson.contains("\"stages\":[{\"stage\":"), mjson)
+
+    // lineage audit: per-pid rows and digest equal a recompute from the
+    // written parquet, and the snapshot is one file
+    assert(LineageAudit.mismatches(ExtractJob.docs(spark, out), lin).isEmpty)
+    val snapFiles = Files.list(java.nio.file.Paths.get(out, "_lineage", "data", "offset=1"))
+    try assert(snapFiles.iterator().asScala.count(_.toString.endsWith(".parquet")) == 1)
+    finally snapFiles.close()
+  }
+
+  test("lineage audit of a resumed run: per-pid rows and digest equal a recompute from the written parquet") {
+    val out = freshDir("audit")
+    val pages = Corpus.pages(spark, sfDir)
+    // a run killed after pids 0..4, then the complement
+    val r1 = ExtractJob.run(spark, pages, JobConfig(out, numPids = 16, limitPids = Some((0 until 5).toSet)))
+    assert(LineageAudit.mismatches(ExtractJob.docs(spark, out), Lineage.table(spark, out)).isEmpty)
+    val r2 = ExtractJob.run(spark, pages, JobConfig(out, numPids = 16))
+    val written = ExtractJob.docs(spark, out)
+    assert(LineageAudit.mismatches(written, Lineage.table(spark, out)).isEmpty)
+    assert(r1.docsTotal + r2.docsTotal == written.count())
+    assert(r1.bytesIn + r2.bytesIn == written.agg(sum("in_bytes")).head.getLong(0))
+  }
+
+  test("lineage is observed in the write stage, above the one pid exchange (plan shape)") {
+    val plan = jobWritePlan
+    val all = LineageAudit.nodes(plan)
+    val observed = all.collect { case c: CollectMetricsExec => c }
+    val exchanges = all.collect { case e: ShuffleExchangeExec => e }
+    assert(observed.size == 1 && exchanges.size == 1, plan.toString)
+    val exchange = exchanges.head
+    assert(exchange.shuffleOrigin == REBALANCE_PARTITIONS_BY_COL, plan.toString)
+    assert(exchange.outputPartitioning.asInstanceOf[org.apache.spark.sql.catalyst.plans.physical.HashPartitioning]
+      .expressions.flatMap(_.references.map(_.name)) == Seq("pid"), plan.toString)
+    // above the exchange = in the result stage, whose accumulator updates
+    // Spark applies once per partition even when a task is retried
+    assert(LineageAudit.nodes(observed.head).contains(exchange),
+      s"the lineage observation must sit above the pid exchange:\n$plan")
+  }
+
+  test("empty input: a pid with no rows commits (p, 0, 0, \"0\"); an empty page frame commits zeros") {
+    import spark.implicits._
+    val pages = Corpus.pages(spark, sfDir)
+    val one = pages.where(col("doc_id") === 1L)
+    val onePid = one.select(ExtractJob.pidCol(4)).head.getInt(0)
+    val out = freshDir("empty-pids")
+    val r = LineageAudit.within(ExtractJob.run(spark, one, JobConfig(out, numPids = 4)))
+    assert(r.docsTotal == 1 && r.pidsProcessed == 4)
+    val lin = Lineage.table(spark, out).select("partition_id", "rows", "bytes", "digest")
+      .as[(Int, Long, Long, String)].collect().map(l => l._1 -> l).toMap
+    assert(lin.keySet == (0 until 4).toSet && Lineage.committedPids(out) == (0 until 4).toSet)
+    (0 until 4).filter(_ != onePid).foreach(p => assert(lin(p) == ((p, 0L, 0L, "0"))))
+    assert(lin(onePid)._2 == 1L && lin(onePid)._4 != "0")
+    assert(LineageAudit.mismatches(ExtractJob.docs(spark, out), Lineage.table(spark, out)).isEmpty)
+
+    // an empty frame plans as an empty LocalTableScan: the optimizer keeps
+    // the observation over it, and it reports zeros instead of blocking
+    val none = freshDir("empty-frame")
+    val r0 = LineageAudit.within(ExtractJob.run(spark, pages.limit(0), JobConfig(none, numPids = 4)))
+    assert(r0.docsTotal == 0 && r0.bytesIn == 0 && r0.pidsProcessed == 4)
+    assert(Lineage.table(spark, none).select("partition_id", "rows", "bytes", "digest")
+      .as[(Int, Long, Long, String)].collect().sortBy(_._1).toSeq == (0 until 4).map(p => (p, 0L, 0L, "0")))
   }
 
   test("pipeline over WARC input: same ok-row set as the parquet path") {
@@ -280,24 +377,15 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("extraction shuffle carries extracted output, not raw html (plan shape)") {
-    graft.functions.GraftFunctions.register(spark)
-    val pages = Corpus.pages(spark, sfDir)
-    val extracted = pages
-      .withColumn("pid", ExtractJob.pidCol(16))
-      .select(col("url"),
-        call_function("extract_content", col("url"), col("html"), col("lang")).as("r"), col("pid"))
-      .repartition(16, col("pid"))
-    val plan = extracted.queryExecution.sparkPlan // pre-AQE: exchanges visible
-    val exchanges = plan.collect {
-      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
-    }
+    val plan = jobWritePlan
+    val exchanges = LineageAudit.nodes(plan).collect { case e: ShuffleExchangeExec => e }
     assert(exchanges.nonEmpty, s"expected a shuffle exchange:\n$plan")
     // the exchange's payload is the extraction RESULT — raw html must have
     // been projected away below it (map-side extraction)
     exchanges.foreach { e =>
       val names = e.output.map(_.name)
       assert(!names.contains("html"), s"raw html crosses the shuffle: $names")
-      assert(names.contains("r") || names.exists(_.startsWith("r")),
+      assert(names.contains("extracted_text") || names.contains("r"),
         s"extraction result must cross the shuffle: $names")
     }
   }

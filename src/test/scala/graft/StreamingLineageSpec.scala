@@ -78,6 +78,10 @@ class StreamingLineageSpec extends AnyFunSuite {
     val linRows = lin.agg(sum(col("rows"))).head().getLong(0)
     assert(linRows == StreamingLineage.docs(spark, out).count(),
       "lineage row counts must reconcile with the table")
+    // and every (epoch, pid) row and digest equals a recompute from the
+    // written parquet
+    val audit = LineageAudit.mismatches(StreamingLineage.docs(spark, out), lin, "epoch")
+    assert(audit.isEmpty, s"lineage differs from the written table: $audit")
     // schema evolution bookkeeping: every snapshot records its writer
     // schema, including the epoch column the streaming commits carry
     (1L to m.snapshot).foreach { s =>
@@ -85,6 +89,26 @@ class StreamingLineageSpec extends AnyFunSuite {
         s"snapshot $s must record the widened writer schema")
     }
 
+    Seq(warcDir, out, cp).foreach(d => graft.util.Staging.deleteRec(Paths.get(d)))
+  }
+
+  test("empty WARC chunk: its epoch commits with no lineage rows") {
+    val warcDir = Files.createTempDirectory("graft-sl3-warc").toString
+    val out = Files.createTempDirectory("graft-sl3-out").toString
+    val cp = Files.createTempDirectory("graft-sl3-cp").toString
+    Warc.write(spark, Corpus.pages(spark, sfDir), warcDir, numFiles = 1)
+    Files.write(Paths.get(warcDir, "part-00001.warc.gz"), Array.emptyByteArray)
+    val seen = scala.collection.mutable.ArrayBuffer.empty[(Long, Boolean)]
+    LineageAudit.within(StreamingLineage.run(spark, warcDir, out, cp, numPids = 4,
+      maxFilesPerTrigger = Some(1), onEpoch = (id, committed) => { seen += ((id, committed)); () }))
+    assert(seen == Seq((0L, true), (1L, true)), s"epochs: $seen")
+    val m = Lineage.readManifestFull(out)
+    assert(m.epochs == Set(0L, 1L) && m.snapshot == 2L)
+    assert(Lineage.schemaAt(out, 2L).contains("epoch"))
+    val lin = spark.read.option("mergeSchema", "true").parquet(s"$out/_lineage/data")
+    assert(lin.where(col("epoch") === 1L).count() == 0, "the empty epoch must commit no lineage rows")
+    assert(lin.where(col("epoch") === 0L).count() > 0)
+    assert(LineageAudit.mismatches(StreamingLineage.docs(spark, out), lin, "epoch").isEmpty)
     Seq(warcDir, out, cp).foreach(d => graft.util.Staging.deleteRec(Paths.get(d)))
   }
 

@@ -146,6 +146,34 @@ class WarcSpec extends AnyFunSuite {
     Seq(d1, d2).foreach(d => graft.util.Staging.deleteRec(java.nio.file.Paths.get(d)))
   }
 
+  test("numFiles = n: file k holds exactly the urls whose hash is k mod n, none empty") {
+    import spark.implicits._
+    val pages = Corpus.pages(spark, sfDir).where(col("html").isNotNull).cache()
+    // target urls per chunk, read with the JDK's gzip reader (independent
+    // of the engine's WARC parser)
+    def urls(p: java.nio.file.Path): Set[String] = {
+      val r = new java.io.BufferedReader(new java.io.InputStreamReader(
+        new java.util.zip.GZIPInputStream(java.nio.file.Files.newInputStream(p)), StandardCharsets.ISO_8859_1))
+      try Iterator.continually(r.readLine()).takeWhile(_ != null)
+        .collect { case l if l.startsWith("WARC-Target-URI: ") => l.stripPrefix("WARC-Target-URI: ").trim }
+        .toSet
+      finally r.close()
+    }
+    Seq(2, 4, 12).foreach { n =>
+      val dir = java.nio.file.Files.createTempDirectory(s"graft-warc-n$n").toString
+      Warc.write(spark, pages, dir, numFiles = n)
+      val want = pages.select(col("url"), pmod(xxhash64(col("url")), lit(n.toLong)).cast("int"))
+        .as[(String, Int)].collect().groupBy(_._2).map { case (k, us) => k -> us.map(_._1).toSet }
+      (0 until n).foreach { k =>
+        val got = urls(java.nio.file.Paths.get(dir, f"part-$k%05d.warc.gz"))
+        assert(got.nonEmpty, s"numFiles = $n: file $k is empty")
+        assert(got == want(k), s"numFiles = $n: file $k holds the wrong urls")
+      }
+      graft.util.Staging.deleteRec(java.nio.file.Paths.get(dir))
+    }
+    pages.unpersist()
+  }
+
   test("output chunk files are deterministic across writes") {
     val d1 = java.nio.file.Files.createTempDirectory("graft-warc-a").toString
     val d2 = java.nio.file.Files.createTempDirectory("graft-warc-b").toString
